@@ -3,8 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables
-import graft.etl.Pipeline.{CheckResult, StageResult}
-import graft.sources.Bronze
+import graft.etl.Pipeline
+import graft.etl.Pipeline.{CheckResult, KeyStats, StageResult}
 
 /** End-to-end training-data curation pipeline — the corpus-side
   * counterpart of [[graft.etl.Pipeline]]'s medallion run, composing the
@@ -67,36 +67,36 @@ object CorpusPipeline {
   def runStages(spark: SparkSession, sfDir: String,
       outDir: String): Seq[StageResult] =
     stages(spark, sfDir).map { case (name, df) =>
-      val path = s"$outDir/corpus/$name"
-      Bronze.writeParquet(df, path)
-      StageResult("corpus", name, spark.read.parquet(path).count(), path)
+      Pipeline.writeStage("corpus", name, df, outDir)
     }
 
   /** Real validation over the written stages; every check one verdict
-    * row, mirroring [[graft.etl.Pipeline.validate]].
+    * row, mirroring [[graft.etl.Pipeline.validate]]: the five doc_id
+    * checks come from one fused count/distinct query.
     */
   def validate(spark: SparkSession, outDir: String): Seq[CheckResult] = {
     def load(name: String) = spark.read.parquet(s"$outDir/corpus/$name")
-    def pkUnique(name: String, df: DataFrame): Seq[CheckResult] = {
-      val n = df.count()
-      val d = df.select("doc_id").distinct().count()
+    val screen = load("screen")
+    val despan = load("despan")
+    val curriculum = load("curriculum")
+    val keyed = Seq("screen" -> screen, "despan" -> despan,
+      "dedup_exact" -> load("dedup_exact"),
+      "dedup_incremental" -> load("dedup_incremental"),
+      "curriculum" -> curriculum)
+    val stats = Pipeline.keyStats(
+      keyed.map { case (name, df) => (name, df, Some("doc_id")) })
+    val pkChecks = keyed.flatMap { case (name, _) =>
+      val KeyStats(n, _, d) = stats(name)
       Seq(CheckResult("corpus", name, "non_empty", n > 0, s"rows=$n"),
         CheckResult("corpus", name, "pk_unique(doc_id)", d == n,
           s"distinct=$d rows=$n"))
     }
-    val screen = load("screen")
-    val despan = load("despan")
-    val curriculum = load("curriculum")
     val screenKept = screen.filter(col("keep")).count()
     val screenAll = screen.count()
     val badFrac = despan
       .filter(col("kept_frac") < 0.0 || col("kept_frac") > 1.0).count()
     val phaseDomain = curriculum.select("phase").distinct().count()
-    pkUnique("screen", screen) ++
-      pkUnique("despan", despan) ++
-      pkUnique("dedup_exact", load("dedup_exact")) ++
-      pkUnique("dedup_incremental", load("dedup_incremental")) ++
-      pkUnique("curriculum", curriculum) ++ Seq(
+    pkChecks ++ Seq(
       CheckResult("corpus", "screen", "keeps_nonzero_fraction",
         screenKept > 0 && screenKept <= screenAll,
         s"kept=$screenKept of=$screenAll"),

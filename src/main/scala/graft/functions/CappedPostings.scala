@@ -85,6 +85,8 @@ class CappedPostingsAgg(cap: Long, stride: Int)
   private def grow(b: CappedWorkBuf, extra: Int): Unit = {
     val need = b.used + extra
     if (need > b.ds.length) {
+      require(need <= maxLongs,
+        s"capped postings buffer needs $need longs, past its ceiling $maxLongs")
       val cap2 = math.min(maxLongs,
         math.max(need, math.max(stride, b.ds.length * 2)))
       val out = new Array[Long](cap2)
