@@ -1296,11 +1296,18 @@ object Dedup {
     * minima in one pass — no explode, no md5-per-exploded-row, no
     * groupBy exchange of the corpus shingle stream per consumer.
     * Signatures are bit-identical (kernel scaladoc; DedupSpec pins the
-    * identity against the aggregated form). Docs with no shingle are
-    * dropped, matching the aggregated form (no rows → no group).
+    * identity against the aggregated form). Docs with no shingle (an
+    * empty or null `sh_arr`) are dropped before the kernel, matching the
+    * aggregated form (no rows → no group); the kernel would give each an
+    * all-`Long.MaxValue` signature, making them LSH candidates of each
+    * other. Over an unmaterialized [[shingleStrArrays]] projection
+    * ([[lshEval]]) the optimizer pushes this guard into the scan filter,
+    * so the n-gram kernel runs twice per doc there; the persisted-array
+    * callers pay only the size check.
     */
   def minhashSignaturesPortableNarrow(arrs: DataFrame): DataFrame =
     arrs
+      .filter(size(col("sh_arr")) > 0)
       .select(col("doc_id"), graft.functions.PortableMinHash.sig(
         col("sh_arr"),
         Array.tabulate(MinhashK)(slotA),

@@ -214,6 +214,18 @@ class DedupSpec extends SparkSpec {
       .as[(Long, Seq[Long])].collect().toMap
     assert(narrow === agg)
     assert(narrow.nonEmpty)
+    // hand-made arrays with shingle-less docs: the narrow form drops them
+    // as the aggregated form does (no shingle row, no group) instead of
+    // giving each the same all-MaxValue signature
+    val arrs = Seq((1L, Seq("a b c", "b c d")), (2L, Seq.empty[String]),
+      (3L, Seq.empty[String]), (4L, Seq("x y z"))).toDF("doc_id", "sh_arr")
+    val narrowHand = Dedup.minhashSignaturesPortableNarrow(arrs)
+      .as[(Long, Seq[Long])].collect().toMap
+    val aggHand = Dedup.minhashSignaturesPortable(
+        arrs.select(col("doc_id"), explode(col("sh_arr")).as("shingle")))
+      .as[(Long, Seq[Long])].collect().toMap
+    assert(narrowHand === aggHand)
+    assert(narrowHand.keySet === Set(1L, 4L))
   }
 
   test("simhash: identical docs share fingerprint; groups count them") {
@@ -245,6 +257,17 @@ class DedupSpec extends SparkSpec {
     // the symmetric detector misses this pair at its default threshold
     assert(p.getAs[Double]("jaccard") < 0.5)
     assert(Dedup.ngramJaccardPairs(d).collect().isEmpty)
+    // a zero threshold admits every pair sharing a shingle and no other:
+    // doc 4 (8 shingles) shares only "alpha beta gamma" with doc 1 (19)
+    // and doc 2 (6); doc 3 shares nothing
+    val d4 = d.union(Seq((4L,
+      "alpha beta gamma and nine other words of filler text"))
+      .toDF("doc_id", "text"))
+    val all = Dedup.containmentDedupPairs(d4, threshold = 0.0)
+      .select("doc_a", "doc_b", "inter_size", "containment")
+      .as[(Long, Long, Long, Double)].collect().toSet
+    assert(all === Set((1L, 2L, 6L, 1.0), (1L, 4L, 1L, 1.0 / 8),
+      (2L, 4L, 1L, 1.0 / 6)))
   }
 
   test("minhashIncremental: batch probes index, lower batch id wins, unique kept") {

@@ -57,6 +57,13 @@ class GraphSpec extends SparkSpec {
     assert(got(2L) === ((258375000000L, 1L)))
     assert(got(3L) === ((370812500000L, 0L)))
     graft.CheckpointLease.releaseAll()
+    // one iteration, two seeds (node 2, then node 1 on the id tie):
+    // teleport = 7.5e10, init r = [5e11, 5e11, 0], contribs 5e11 / 2.5e11
+    val one = Graph.personalizedPagerank(edges, iterations = 1, seedCount = 2)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
+    assert(one === Map(1L -> ((287500000000L, 1L)),
+      2L -> ((500000000000L, 1L)), 3L -> ((212500000000L, 0L))))
+    graft.CheckpointLease.releaseAll()
   }
 
   test("personalizedPagerank: deterministic across partitionings, " +
@@ -352,6 +359,14 @@ class GraphSpec extends SparkSpec {
     val eIn = Graph.modularityOfLabels(edges, lone).collect()
       .map(r => r.getAs[Long]("cluster_id") -> r.getAs[Long]("e_in")).toMap
     assert(eIn(99L) === 0L)
+    // one round has not settled: labels 1->2, 2->1, 3->1, 10->3, 11->10,
+    // 12->10 split the graph into four clusters with a lower Q
+    val oneRound = Graph.lpaModularity(edges, rounds = 1).collect()
+    assert(oneRound.map(r => (r.getAs[Long]("cluster_id"),
+      r.getAs[Long]("n_nodes"), r.getAs[Long]("e_in"),
+      r.getAs[Long]("d_sum"))).toSet === Set((1L, 2L, 2L, 5L),
+      (2L, 1L, 0L, 2L), (3L, 1L, 0L, 3L), (10L, 2L, 2L, 4L)))
+    assert(oneRound.map(_.getAs[Double]("q_contrib")).sum < qLpa)
     graft.CheckpointLease.releaseAll()
   }
 
