@@ -46,13 +46,13 @@ object Bench {
     .config("spark.sql.legacy.allowHashOnMapType", "true")
     .getOrCreate()
 
-  /** Session hygiene between queries: release leased checkpoints and any
-    * cached plans so one query's storage can never be charged to another
-    * (round-2 post-mortem: leaked checkpoint blocks inflated an unrelated
-    * query 7x in the recorded bench).
+  /** Session hygiene between queries: drop cached plans and every
+    * persisted RDD, `localCheckpoint` blocks included, so one query's
+    * storage can never be charged to another (round-2 post-mortem: leaked
+    * checkpoint blocks inflated an unrelated query 7x in the recorded
+    * bench).
     */
   def reset(spark: SparkSession): Unit = {
-    CheckpointLease.releaseAll()
     spark.catalog.clearCache()
     org.apache.spark.sql.GraftBridge.sessionHygiene(spark)
   }

@@ -29,9 +29,8 @@ object Verify {
         failures(name) =
           s"${e.getClass.getName}: ${Option(e.getMessage).getOrElse("").take(300)}"
       }
-      // release leased checkpoints after each query's consuming action,
-      // then force-drain broadcast/shuffle garbage (see GraftBridge)
-      CheckpointLease.releaseAll()
+      // free checkpoint blocks after each query's consuming action and
+      // force-drain broadcast/shuffle garbage (see GraftBridge)
       org.apache.spark.sql.GraftBridge.sessionHygiene(spark)
     }
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)

@@ -93,9 +93,9 @@ object Components {
       i += 1
     }
     und.unpersist()
-    // the surviving iteration's checkpoint is leased: harnesses release
-    // its blocks after the query's consuming action
-    graft.CheckpointLease.track(labels)
+    // the surviving iteration's checkpoint blocks go with the frame or at
+    // Bench.reset
+    labels
   }
 
   /** Driver-side union-find over a collected (bounded, see

@@ -89,11 +89,11 @@ object Graph {
     // without this the (possibly expensive) edge derivation — here a
     // pair-explosion self-join + distinct — would re-execute per
     // iteration (measured 3x the whole query's cost at sf0.1)
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val deg = graft.CheckpointLease.track(
+    val edges = edgesIn.localCheckpoint()
+    val deg =
       edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint()) // eager: reused every iteration, cut off the scan
+        .localCheckpoint() // eager: reused every iteration, cut off the scan
     val n = deg.count()
     require(n > 0, "pagerank: empty graph")
     val teleport = Scale * 15L / (100L * n)
@@ -111,17 +111,17 @@ object Graph {
         .groupBy(col("dst").as("node"))
         .agg(sum("c").as("csum"))
       // lazy checkpoint: materializes (and caches) when the consuming
-      // action runs through it; every iteration's blocks are leased and
-      // released together after that action (node-count-sized frames, so
+      // action runs through it; the blocks go when their frame is
+      // collected or at Bench.reset (node-count-sized frames, so
       // holding O(iterations) of them is cheap — unlike Components, no
       // per-iteration driver action is needed here because the iteration
       // count is fixed, not convergence-tested)
-      ranks = graft.CheckpointLease.track(
+      ranks =
         deg.join(contribs, Seq("node"), "left")
           .select(col("node"), col("outdeg"),
             (lit(teleport) +
               expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
     }
     ranks.select(col("node").as("part_node"), col("r").as("rank_scaled"))
   }
@@ -152,18 +152,18 @@ object Graph {
     */
   def personalizedPagerank(edgesIn: DataFrame, iterations: Int = 3,
       seedCount: Int = PprSeedCount): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val deg = graft.CheckpointLease.track(
+    val edges = edgesIn.localCheckpoint()
+    val deg =
       edges.groupBy(col("src").as("node"))
         .agg(count(lit(1)).as("outdeg"))
-        .localCheckpoint())
+        .localCheckpoint()
     val n = deg.count()
     require(n > 0, "personalizedPagerank: empty graph")
     val s = math.min(seedCount.toLong, n)
-    val seeds = broadcast(graft.CheckpointLease.track(
+    val seeds = broadcast(
       deg.orderBy(col("outdeg").desc, col("node")).limit(seedCount)
         .select(col("node"), lit(1L).as("seed_flag"))
-        .localCheckpoint()))
+        .localCheckpoint())
     val teleport = Scale * 15L / (100L * s)
     val bcRanks = n <= NodeBroadcastMaxRows
     var ranks = deg.join(seeds, Seq("node"), "left")
@@ -177,14 +177,14 @@ object Graph {
         .join(if (bcRanks) broadcast(contrib) else contrib, Seq("src"))
         .groupBy(col("dst").as("node"))
         .agg(sum("c").as("csum"))
-      ranks = graft.CheckpointLease.track(
+      ranks =
         deg.join(contribs, Seq("node"), "left")
           .join(seeds, Seq("node"), "left")
           .select(col("node"), col("outdeg"),
             (when(col("seed_flag").isNotNull, lit(teleport))
               .otherwise(lit(0L)) +
               expr("(85 * coalesce(csum, 0L)) div 100")).as("r"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
     }
     ranks.join(seeds, Seq("node"), "left")
       .select(col("node").as("part_node"), col("r").as("rank_scaled"),
@@ -213,28 +213,27 @@ object Graph {
     */
   def bfsDistances(edgesIn: DataFrame, seedCount: Int = PprSeedCount,
       rounds: Int = BfsRounds): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("outdeg"))
     val n = deg.count()
     require(n > 0, "bfsDistances: empty graph")
     def gate(df: DataFrame) =
       if (n <= NodeBroadcastMaxRows) broadcast(df) else df
-    var dist = graft.CheckpointLease.track(
+    var dist =
       deg.orderBy(col("outdeg").desc, col("node")).limit(seedCount)
         .select(col("node"), lit(0L).as("dist"))
-        .localCheckpoint())
+        .localCheckpoint()
     var frontier = dist
     for (r <- 1 to rounds) {
       val cand = edges
         .join(gate(frontier.select(col("node").as("src"))), Seq("src"))
         .select(col("dst").as("node")).distinct()
-      frontier = graft.CheckpointLease.track(
+      frontier =
         cand.join(gate(dist), Seq("node"), "left_anti")
           .select(col("node"), lit(r.toLong).as("dist"))
-          .localCheckpoint(false))
-      dist = graft.CheckpointLease.track(
-        dist.union(frontier).localCheckpoint(false))
+          .localCheckpoint(false)
+      dist = dist.union(frontier).localCheckpoint(false)
     }
     dist.select(col("node").as("part_node"), col("dist"))
   }
@@ -270,7 +269,7 @@ object Graph {
   def labelPropagation(edgesIn: DataFrame,
       rounds: Int = LpaRounds): DataFrame =
     labelPropagationOn(
-      graft.CheckpointLease.track(edgesIn.localCheckpoint()), rounds)
+      edgesIn.localCheckpoint(), rounds)
 
   /** [[labelPropagation]]'s core over an ALREADY-MATERIALIZED edge list
     * — split out so composites ([[lpaModularity]]) can share ONE edge
@@ -279,10 +278,10 @@ object Graph {
     */
   private[ext] def labelPropagationOn(edges: DataFrame,
       rounds: Int): DataFrame = {
-    var labels = graft.CheckpointLease.track(
+    var labels =
       edges.select(col("src").as("node")).distinct()
         .withColumn("label", col("node"))
-        .localCheckpoint())
+        .localCheckpoint()
     val bcLabels = labels.count() <= NodeBroadcastMaxRows
     for (_ <- 1 to rounds) {
       val lab = labels.withColumnRenamed("node", "src")
@@ -291,12 +290,12 @@ object Graph {
         .select(col("dst").as("node"), col("label"))
       // argmax(count, then min label) as ONE partial-merging aggregate:
       // max(struct(count, −label)) — no window over the message stream
-      labels = graft.CheckpointLease.track(
+      labels =
         msgs.groupBy("node", "label").agg(count(lit(1)).as("c"))
           .groupBy("node")
           .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("m"))
           .select(col("node"), (-col("m.nl")).as("label"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
     }
     labels.select(col("node").as("part_node"), col("label"))
   }
@@ -321,7 +320,7 @@ object Graph {
   def modularityOfLabels(edgesIn: DataFrame,
       labelsIn: DataFrame): DataFrame =
     modularityOfLabelsOn(
-      graft.CheckpointLease.track(edgesIn.localCheckpoint()), labelsIn)
+      edgesIn.localCheckpoint(), labelsIn)
 
   /** [[modularityOfLabels]]'s core over an ALREADY-MATERIALIZED edge
     * list (three consumers: degrees, m2, the per-endpoint label joins).
@@ -369,7 +368,7 @@ object Graph {
     // ONE edge checkpoint feeds the LPA rounds AND the modularity
     // degree/m2/intra-edge consumers — re-checkpointing per stage would
     // write the corpus-sized edge list three times
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     modularityOfLabelsOn(edges,
       labelPropagationOn(edges, rounds)
         .select(col("part_node").as("node"), col("label").as("cluster_id")))
@@ -469,10 +468,10 @@ object Graph {
     // list below is consumed THREE times (both wedge sides + the closing
     // join) — materialize each once or the pair-explosion upstream runs
     // 3x (measured ~2.5x the whole query at sf0.1)
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
-    val rel = graft.CheckpointLease.track(
+    val edges = edgesIn.localCheckpoint()
+    val rel =
       orientedEdges(edges, bcDeg = edges.count() <= NodeBroadcastMaxRows)
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     if (nOriented <= broadcastMaxEdges && packable) {
       // EXCHANGE-FREE fast path: both wedge legs AND the closing list
@@ -627,17 +626,17 @@ object Graph {
   def edgeJaccard(edgesIn: DataFrame, topK: Int = EdgeJaccardTopK,
       broadcastMaxEdges: Long = TriangleBroadcastMaxEdges,
       expansionBudget: Long = EdgeJaccardExpansionBudget): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcNodes = edges.count() <= NodeBroadcastMaxRows
-    val deg = graft.CheckpointLease.track(
+    val deg =
       edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     val degU = deg.select(col("node").as("u"), col("deg").as("deg_u"))
     val degV = deg.select(col("node").as("v"), col("deg").as("deg_v"))
     // undirected edges + degree bounds; best_num = 0 edges have zero
     // support and are never output candidates (the old path omitted
     // them the same way: no triangle, no support row)
-    val und = graft.CheckpointLease.track(
+    val und =
       edges.filter(col("src") < col("dst"))
         .select(col("src").as("u"), col("dst").as("v"))
         .join(if (bcNodes) broadcast(degU) else degU, Seq("u"))
@@ -646,7 +645,7 @@ object Graph {
           (least(col("deg_u"), col("deg_v")) - 1L).as("best_num"),
           (greatest(col("deg_u"), col("deg_v")) - 1L).as("best_den"))
         .filter(col("best_num") > 0L)
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     def score(cand: DataFrame): DataFrame =
       supportFor(cand, edges)
         .join(cand.select("u", "v", "deg_u", "deg_v"), Seq("u", "v"))
@@ -712,8 +711,7 @@ object Graph {
   private[ext] def edgeJaccardFull(edges: DataFrame, bcNodes: Boolean,
       deg: DataFrame, topK: Int,
       broadcastMaxEdges: Long): DataFrame = {
-    val rel = graft.CheckpointLease.track(
-      orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false))
+    val rel = orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     val triangles = triangleCorners(rel, nOriented, packable,
       broadcastMaxEdges)
@@ -768,7 +766,7 @@ object Graph {
     * DuckDB twin is the same label by recursive closure.
     */
   def weakComponents(edgesIn: DataFrame): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val pairs = edges.filter(col("src") < col("dst"))
       .select(col("src").as("doc_a"), col("dst").as("doc_b"))
     Components.connectedComponents(pairs)
@@ -826,19 +824,18 @@ object Graph {
     */
   def wccCertificate(edgesIn: DataFrame,
       maxRounds: Int = WccCertMaxRounds): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val pairs = edges.filter(col("src") < col("dst"))
       .select(col("src").as("doc_a"), col("dst").as("doc_b"))
-    val comp = graft.CheckpointLease.track(
-      Components.connectedComponents(pairs).localCheckpoint())
+    val comp = Components.connectedComponents(pairs).localCheckpoint()
     val nNodes = comp.count()
     def gate(df: DataFrame) =
       if (nNodes <= NodeBroadcastMaxRows) broadcast(df) else df
-    var settled = graft.CheckpointLease.track(
+    var settled =
       comp.filter(col("node") === col("comp"))
         .select(col("node"), lit(null).cast("long").as("parent"),
           lit(0L).as("depth"))
-        .localCheckpoint())
+        .localCheckpoint()
     var frontier = settled
     var r = 1
     var done = false
@@ -847,14 +844,13 @@ object Graph {
         .join(gate(frontier.select(col("node").as("dst"))), Seq("dst"))
         .groupBy(col("src").as("node"))
         .agg(min(col("dst")).as("parent"))
-      val next = graft.CheckpointLease.track(
+      val next =
         cand.join(gate(settled.select("node")), Seq("node"), "left_anti")
           .select(col("node"), col("parent"), lit(r.toLong).as("depth"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
       if (next.isEmpty) done = true
       else {
-        settled = graft.CheckpointLease.track(
-          settled.union(next).localCheckpoint(false))
+        settled = settled.union(next).localCheckpoint(false)
         frontier = next
         r += 1
       }
@@ -918,7 +914,7 @@ object Graph {
   def linkPrediction(edgesIn: DataFrame, topK: Int = LinkPredTopK,
       maxMiddleDegree: Long = LinkPredMaxMiddleDegree,
       neighborBudget: Int = LinkPredNeighborBudget): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val nEdges = edges.count()
     val bcNodes = nEdges <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
@@ -966,12 +962,11 @@ object Graph {
     */
   def clusteringCoeff(edgesIn: DataFrame,
       broadcastMaxEdges: Long = TriangleBroadcastMaxEdges): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcNodes = edges.count() <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))
-    val rel = graft.CheckpointLease.track(
-      orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false))
+    val rel = orientedEdges(edges, bcDeg = bcNodes).localCheckpoint(false)
     val (nOriented, packable) = orientedStats(rel)
     val corners = triangleCorners(rel, nOriented, packable,
       broadcastMaxEdges)
@@ -1014,7 +1009,7 @@ object Graph {
   val NodeBroadcastMaxRows: Long = 10000000L
 
   def kcore(edgesIn: DataFrame, k: Int = 80, rounds: Int = 8): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     // the count is free on the just-materialized checkpoint; node-sized
     // tables (degrees, dropped sets, decrements — all bounded by the
     // node count ≤ edge count) broadcast under the gate
@@ -1039,9 +1034,9 @@ object Graph {
     * first touch only the shrinking frontier.
     */
   private def kcoreDelta(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
-    var deg = graft.CheckpointLease.track(
+    var deg =
       edges.groupBy(col("src").as("node")).agg(count(lit(1)).as("deg"))
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     // DATA-DEPENDENT broadcasts (r17 verdict #4): dropped/decr are
     // node-sized in the worst case (a first round can shed most of the
     // graph), not bounded by construction — gated once on the node
@@ -1055,12 +1050,12 @@ object Graph {
       val decr = edges
         .join(gate(dropped.withColumnRenamed("node", "dst")), Seq("dst"))
         .groupBy(col("src").as("node")).agg(count(lit(1)).as("dec"))
-      deg = graft.CheckpointLease.track(
+      deg =
         deg.join(gate(dropped), Seq("node"), "left_anti")
           .join(gate(decr), Seq("node"), "left")
           .select(col("node"),
             (col("deg") - coalesce(col("dec"), lit(0L))).as("deg"))
-          .localCheckpoint(false))
+          .localCheckpoint(false)
       dropped = deg.filter(col("deg") < k).select("node")
     }
     // final round's delta IS the output: survivors with their in-core
@@ -1087,11 +1082,11 @@ object Graph {
         .agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k)
         .select("node")
-      edges = graft.CheckpointLease.track(edges
+      edges = edges
         .join(keep.withColumnRenamed("node", "src"), Seq("src"))
         .join(keep.withColumnRenamed("node", "dst"), Seq("dst"))
         .select("src", "dst")
-        .localCheckpoint(false))
+        .localCheckpoint(false)
     }
     edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("core_deg"))
@@ -1110,9 +1105,9 @@ object Graph {
     // materialized once: the histogram feeds both the totals and the
     // output join — without this the (expensive) edge derivation and
     // both aggregates execute twice
-    val hist = graft.CheckpointLease.track(
+    val hist =
       deg.groupBy("degree").agg(count(lit(1)).as("n_nodes"))
-        .localCheckpoint())
+        .localCheckpoint()
     val tot = hist.agg(sum("n_nodes").as("n_total"))
     hist.crossJoin(broadcast(tot))
       .select(col("degree"), col("n_nodes"),
@@ -1172,7 +1167,7 @@ object Graph {
     * would bucket degrees first (same trade as [[hits]]).
     */
   def assortativity(edgesIn: DataFrame): DataFrame = {
-    val edges = graft.CheckpointLease.track(edgesIn.localCheckpoint())
+    val edges = edgesIn.localCheckpoint()
     val bcDeg = edges.count() <= NodeBroadcastMaxRows
     val deg = edges.groupBy(col("src").as("node"))
       .agg(count(lit(1)).as("deg"))

@@ -38,7 +38,7 @@ case class PortableMinHashSig(child: Expression, as: Array[Long],
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
 
   def sig(arr: ArrayData): ArrayData = {
-    val md = java.security.MessageDigest.getInstance("MD5")
+    val md = PortableMinHash.md5.get()
     val n = arr.numElements()
     val out = Array.fill(k)(Long.MaxValue)
     var i = 0
@@ -73,6 +73,13 @@ case class PortableMinHashSig(child: Expression, as: Array[Long],
 }
 
 object PortableMinHash {
+  /** One MD5 digest per thread, reused across rows: `digest(bytes)`
+    * resets it after each call.
+    */
+  private[functions] val md5: ThreadLocal[java.security.MessageDigest] =
+    ThreadLocal.withInitial(() =>
+      java.security.MessageDigest.getInstance("MD5"))
+
   /** Signature column over `array<string>` shingles; `as`/`bs`/`mod`
     * are the affine slot-hash constants (see
     * [[graft.ext.Dedup.slotHashPortable]]).

@@ -29,14 +29,6 @@ object Layout {
 
   val ZBits = 16 // bits per dimension → 32-bit z-value
 
-  /** Bit-interleave two [0, 2^ZBits) integer columns (Morton code). */
-  def morton(x: Column, y: Column): Column =
-    (0 until ZBits).map { i =>
-      val xb = shiftright(x, i).bitwiseAND(1).cast("long") * (1L << (2 * i))
-      val yb = shiftright(y, i).bitwiseAND(1).cast("long") * (1L << (2 * i + 1))
-      xb + yb
-    }.reduce(_ + _)
-
   /** Linear min/max scale of a numeric column to [0, 2^ZBits). */
   private def scaled(c: Column, lo: Double, hi: Double): Column = {
     val span = if (hi > lo) hi - lo else 1.0
@@ -46,7 +38,8 @@ object Layout {
   /** Z-order `df` by two numeric columns and write `files` parquet files. */
   def writeZOrdered(df: DataFrame, path: String, colA: String,
       colB: String, files: Int): Unit =
-    writeCurveOrdered(df, path, colA, colB, files, morton)
+    writeCurveOrdered(df, path, colA, colB, files,
+      graft.plans.Layout.mortonKey(_, _, ZBits))
 
   /** Hilbert-order variant: same scaffold, but the cluster key is the
     * Hilbert-curve distance ([[graft.functions.HilbertIndex]], codegen'd)

@@ -32,7 +32,11 @@ object GraftBridge {
   def drainListenerBus(spark: SparkSession, timeoutMs: Long): Unit =
     spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs)
 
-  /** Between-queries session reset for long-lived benchmark/verify JVMs.
+  /** Between-queries session reset for long-lived benchmark/verify JVMs,
+    * and the one release point for the `localCheckpoint` blocks queries
+    * leave behind: `RDD.localCheckpoint` persists its RDD, so the
+    * unpersist-all below frees every checkpoint, whether or not the frame
+    * that made it is still reachable.
     *
     * A single session running ~80 queries twice accumulates broadcast
     * variables and shuffle dependencies whose block-manager/disk storage is

@@ -70,6 +70,35 @@ class BenchSpec extends AnyFunSuite with SparkSpec {
     assert(b.exists(_ > 0), "headline_gate.baseline_sec must be present")
   }
 
+  test("reset frees every checkpoint a query made") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    Bench.consume(SparkEntry.queries("dedup_ngram_jaccard")(spark,
+      "/root/testdata/sf0.001"))
+    // localCheckpoint persists its RDD, so the query's eager checkpoint
+    // is listed here until something unpersists it
+    val made = sc.getPersistentRDDs.keySet -- before
+    assert(made.nonEmpty, "dedup_ngram_jaccard must leave a checkpoint")
+    Bench.reset(spark)
+    assert(sc.getPersistentRDDs.keySet.intersect(made).isEmpty)
+  }
+
+  test("a returned checkpointed frame is collectable once the caller " +
+      "drops it") {
+    // built in a helper so no local of this frame outlives the call
+    def pairsRef() = new java.lang.ref.WeakReference(
+      graft.ext.Dedup.ngramJaccardPairs(
+        Tables.documents(spark, "/root/testdata/sf0.001")))
+    val ref = pairsRef()
+    var tries = 0
+    while (ref.get != null && tries < 40) {
+      System.gc()
+      Thread.sleep(250L)
+      tries += 1
+    }
+    assert(ref.get == null, "nothing may hold a frame its caller dropped")
+  }
+
   test("freshJvmRetry: parse contract matches BenchOne's output line") {
     // the regex lives inline in freshJvmRetry; pin the line format both
     // sides agree on so a drive-by reformat of BenchOne's println can't

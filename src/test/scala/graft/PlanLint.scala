@@ -92,7 +92,6 @@ object PlanLint {
       } catch {
         case e: Throwable => bad ::= s"$name: plan failed: ${e.getMessage}"
       }
-      CheckpointLease.releaseAll()
     }
     val newGlobals = globalWindows.distinct.filterNot(BoundedDomainWindows)
     newGlobals.sorted.foreach(n =>

@@ -309,11 +309,11 @@ class RelationalSpec extends SparkSpec {
     // bound judged on a single sample would fail spuriously in exactly
     // the contended-box episodes BENCHNOTES documents.
     Relational.recursiveSql(spark, "/root/testdata/sf0.01").count()
-    graft.CheckpointLease.releaseAll()
+    graft.Bench.reset(spark)
     val samples = (1 to 2).map { _ =>
       val out = Relational.recursiveSql(spark, "/root/testdata/sf0.01")
       assert(out.count() > 0)
-      graft.CheckpointLease.releaseAll()
+      graft.Bench.reset(spark)
       val ph = Relational.lastRecursionPhases
       assert(Seq("derive", "pairs", "seed", "recursion")
         .forall(ph.contains), s"phase ledger incomplete: $ph")
@@ -850,7 +850,6 @@ class RelationalSpec extends SparkSpec {
     val leaves = q.queryExecution.optimizedPlan.collectLeaves()
     assert(leaves.count(_.output.exists(_.name == "l_shipdate")) === 0,
       "both the scalar max and the probe must read the materialized view")
-    graft.CheckpointLease.releaseAll()
   }
 
   test("dormantRichCustomers: integer threshold above positive-average " +

@@ -827,7 +827,6 @@ class TimeSeriesSpec extends SparkSpec {
     val r = TimeSeries.markovSteadyState(ev)
       .select("event_type", "steady_ppb", "steady_share", "from_share")
       .as[(String, Long, Double, Double)].collect().sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(r.map(x => (x._1, x._2)).toSeq ===
       Seq(("A", 333333333L), ("B", 666666666L)))
     assert(r(0)._3 === 333333333L / 1000000000.0)

@@ -64,7 +64,6 @@ class ComponentsSpec extends SparkSpec {
       .select("cluster_id", "n_docs", "e_in", "d_sum", "m", "q_contrib")
       .as[(Long, Long, Long, Long, Long, Double)].collect()
       .map(t => t._1 -> t).toMap
-    graft.CheckpointLease.releaseAll()
     assert(got(1L) === ((1L, 3L, 3L, 6L, 4L, 0.1875)))
     assert(got(4L) === ((4L, 2L, 1L, 2L, 4L, 0.1875)))
   }

@@ -313,7 +313,6 @@ class CorpusSpec extends SparkSpec {
     assert(r("A")._5 === 2000000.0 / 3000000.0)
     assert(r("B")._5 === 1000000.0 / 3000000.0)
     assert(r("B")._5 > r("B")._4, "tail source must be up-weighted")
-    graft.CheckpointLease.releaseAll()
   }
 
   test("bpePairCounts: within-token adjacent pairs, deterministic ranks") {
@@ -360,7 +359,6 @@ class CorpusSpec extends SparkSpec {
       .select("source", "n_tokens", "w_micro", "alloc_tokens", "epochs_bp")
       .as[(String, Long, Long, Long, Long)].collect()
       .map(t => t._1 -> t).toMap
-    graft.CheckpointLease.releaseAll()
     assert(r("srcA") === (("srcA", 16L, 4000000L, 666666L,
       (666666L * 10000L) / 16L)))
     assert(r("srcB") === (("srcB", 4L, 2000000L, 333333L,

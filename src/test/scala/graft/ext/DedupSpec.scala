@@ -42,7 +42,6 @@ class DedupSpec extends SparkSpec {
       .select("threshold", "n_dropped", "n_kept", "drop_rate")
       .as[(Double, Long, Long, Double)].collect()
       .map(t => t._1 -> t).toMap
-    graft.CheckpointLease.releaseAll()
     assert(r(0.5) === ((0.5, 2L, 2L, 0.5)))  // doc2 and doc3 drop
     assert(r(0.6) === ((0.6, 1L, 3L, 0.25))) // only the exact dup drops
     assert(r(0.9) === ((0.9, 1L, 3L, 0.25)))
@@ -59,7 +58,6 @@ class DedupSpec extends SparkSpec {
       .select("src_a", "src_b", "inter_size", "n_a", "n_b", "union_size",
         "jaccard")
       .as[(String, String, Long, Long, Long, Long, Double)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     // disjoint pairs produce no row (inner join on shingle)
     assert(r === Set(("srcA", "srcB", 1L, 2L, 2L, 3L, 1.0 / 3.0)))
   }
@@ -171,9 +169,7 @@ class DedupSpec extends SparkSpec {
     val cands = Dedup.lshCandidatesPortable(
         Dedup.minhashSignaturesPortable(Dedup.shingles(d)))
       .as[(Long, Long)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     val r = Dedup.lshEval(d).collect().head
-    graft.CheckpointLease.releaseAll()
     assert(r.getAs[Long]("n_true") === truth.size.toLong)
     assert(r.getAs[Long]("n_cand") === cands.size.toLong)
     assert(r.getAs[Long]("n_hit") === (truth & cands).size.toLong)
@@ -446,7 +442,6 @@ class DedupSpec extends SparkSpec {
     val r = Dedup.crossSourceDupMatrix(d)
       .select("source_lo", "source_hi", "n_pairs", "n_docs", "intra")
       .as[(String, String, Long, Long, Boolean)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     assert(r === Set(
       ("srcA", "srcB", 1L, 2L, false),
       ("srcA", "srcA", 1L, 2L, true)))
@@ -605,7 +600,6 @@ class DedupSpec extends SparkSpec {
     val naive = key(Dedup.ngramJaccardPairs(d))
     val viaEnum = key(Dedup.jaccardPairsAuto(d, crossover = Long.MaxValue))
     val viaPrefix = key(Dedup.jaccardPairsAuto(d, crossover = 0L))
-    graft.CheckpointLease.releaseAll()
     assert(viaEnum === naive, "below the crossover: enumeration arm")
     assert(viaPrefix === naive, "above the crossover: PPJoin arm")
     assert(naive.map(p => (p._1, p._2)) === Set((1L, 2L), (1L, 3L),
@@ -667,7 +661,6 @@ class DedupSpec extends SparkSpec {
         r.getAs[Double]("jaccard"))
     val naive = Dedup.ngramJaccardPairs(d).collect().map(key).toSet
     val pref = Dedup.prefixJaccardPairs(d).collect().map(key).toSet
-    graft.CheckpointLease.releaseAll()
     assert(pref === naive)
     assert(naive.map(p => (p._1, p._2)) === Set((1L, 2L), (1L, 3L),
       (2L, 3L)))
@@ -691,7 +684,6 @@ class DedupSpec extends SparkSpec {
         r.getAs[Double]("jaccard"))
     val naive = Dedup.ngramJaccardPairs(d).collect().map(key).toSet
     val pref = Dedup.prefixJaccardPairs(d).collect().map(key).toSet
-    graft.CheckpointLease.releaseAll()
     assert(pref === naive)
     assert(naive.map(p => (p._1, p._2, p._5)) === Set((1L, 2L, 0.5)),
       "the exact-boundary pair must survive every candidate filter")
@@ -705,7 +697,6 @@ class DedupSpec extends SparkSpec {
         r.getAs[Long]("inter_size"), r.getAs[Long]("union_size"))
     val naive = Dedup.ngramJaccardPairs(d).collect().map(key).toSet
     val pref = Dedup.prefixJaccardPairs(d).collect().map(key).toSet
-    graft.CheckpointLease.releaseAll()
     assert(pref === naive)
     assert(naive.nonEmpty, "fixture must exercise the pair path")
   }

@@ -26,7 +26,6 @@ class GraphSpec extends SparkSpec {
     assert(got(2L) === mid)
     // rank mass approximately conserved (truncation loses <1 unit/node/step)
     assert(math.abs(got.values.sum - Graph.Scale) < 10L)
-    graft.CheckpointLease.releaseAll()
   }
 
   test("pagerank is deterministic across partitionings") {
@@ -36,10 +35,8 @@ class GraphSpec extends SparkSpec {
     ).toDF("src", "dst")
     val a = Graph.pagerank(edges.repartition(1), iterations = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     val b = Graph.pagerank(edges.repartition(7), iterations = 3)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(a.toSeq === b.toSeq)
   }
 
@@ -56,14 +53,12 @@ class GraphSpec extends SparkSpec {
     assert(got(1L) === ((370812500000L, 0L)))
     assert(got(2L) === ((258375000000L, 1L)))
     assert(got(3L) === ((370812500000L, 0L)))
-    graft.CheckpointLease.releaseAll()
     // one iteration, two seeds (node 2, then node 1 on the id tie):
     // teleport = 7.5e10, init r = [5e11, 5e11, 0], contribs 5e11 / 2.5e11
     val one = Graph.personalizedPagerank(edges, iterations = 1, seedCount = 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     assert(one === Map(1L -> ((287500000000L, 1L)),
       2L -> ((500000000000L, 1L)), 3L -> ((212500000000L, 0L))))
-    graft.CheckpointLease.releaseAll()
   }
 
   test("personalizedPagerank: deterministic across partitionings, " +
@@ -75,10 +70,8 @@ class GraphSpec extends SparkSpec {
       .toDF("src", "dst")
     val a = Graph.personalizedPagerank(edges.repartition(1), 3, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     val b = Graph.personalizedPagerank(edges.repartition(7), 3, 2)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(a.toSeq === b.toSeq)
     // seeds: nodes 1 and 3 (degree 3 each, smallest ids win ties)
     assert(a.filter(_._3 == 1L).map(_._1).toSeq === Seq(1L, 3L))
@@ -93,12 +86,10 @@ class GraphSpec extends SparkSpec {
     val edges = und.flatMap { case (u, v) => Seq((u, v), (v, u)) }
       .toDF("src", "dst")
     assert(Graph.triangleCount(edges).first().getLong(0) === 4L)
-    graft.CheckpointLease.releaseAll()
     // triangle-free graph: a 4-cycle
     val cyc = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 1L))
       .flatMap { case (u, v) => Seq((u, v), (v, u)) }.toDF("src", "dst")
     assert(Graph.triangleCount(cyc).first().getLong(0) === 0L)
-    graft.CheckpointLease.releaseAll()
   }
 
   test("triangleCount: shuffle-join fallback path counts identically") {
@@ -109,10 +100,8 @@ class GraphSpec extends SparkSpec {
     val edges = und.flatMap { case (u, v) => Seq((u, v), (v, u)) }
       .toDF("src", "dst")
     val viaBroadcast = Graph.triangleCount(edges).first().getLong(0)
-    graft.CheckpointLease.releaseAll()
     val viaShuffle =
       Graph.triangleCount(edges, broadcastMaxEdges = 0L).first().getLong(0)
-    graft.CheckpointLease.releaseAll()
     assert(viaBroadcast === 5L) // 4 in K4 + triangle 4-5-6
     assert(viaShuffle === viaBroadcast)
   }
@@ -145,10 +134,8 @@ class GraphSpec extends SparkSpec {
     val core = Graph.kcore(edges, k = 2, rounds = 4)
       .as[(Long, Long)].collect().toMap
     assert(core === Map(1L -> 2L, 2L -> 2L, 3L -> 2L))
-    graft.CheckpointLease.releaseAll()
     // k above the max degree empties the graph
     assert(Graph.kcore(edges, k = 10, rounds = 3).count() === 0L)
-    graft.CheckpointLease.releaseAll()
   }
 
   test("coPurchaseEdges pairs within orders, undirected, mega-order capped") {
@@ -180,7 +167,6 @@ class GraphSpec extends SparkSpec {
     val got = Graph.edgeJaccard(edges)
       .select("u", "v", "common", "deg_u", "deg_v", "jaccard")
       .as[(Long, Long, Long, Long, Long, Double)].collect()
-    graft.CheckpointLease.releaseAll()
     assert(got.length === 6)
     assert(got.map(r => (r._1, r._2)).toSet ===
       Set((1L, 2L), (1L, 3L), (1L, 4L), (2L, 3L), (2L, 4L), (3L, 4L)))
@@ -194,7 +180,6 @@ class GraphSpec extends SparkSpec {
     // deterministic ranking: non-4 edges (j=1.0) sort before 4-edges
     val ranked = Graph.edgeJaccard(edges).select("u", "v")
       .as[(Long, Long)].collect().toSeq
-    graft.CheckpointLease.releaseAll()
     assert(ranked === Seq((1L, 2L), (1L, 3L), (2L, 3L),
       (1L, 4L), (2L, 4L), (3L, 4L)))
   }
@@ -205,10 +190,8 @@ class GraphSpec extends SparkSpec {
     val edges = und.flatMap { case (u, v) => Seq((u, v), (v, u)) }
       .toDF("src", "dst")
     val viaBroadcast = Graph.edgeJaccard(edges).collect().toSeq
-    graft.CheckpointLease.releaseAll()
     val viaShuffle = Graph.edgeJaccard(edges, broadcastMaxEdges = 0L)
       .collect().toSeq
-    graft.CheckpointLease.releaseAll()
     assert(viaBroadcast === viaShuffle)
   }
 
@@ -228,10 +211,8 @@ class GraphSpec extends SparkSpec {
       .flatMap { case (u, v) => Seq((u, v), (v, u)) }
       .toDF("src", "dst")
     val pruned = Graph.edgeJaccard(edges, topK = 10).collect().toSeq
-    graft.CheckpointLease.releaseAll()
     val fallback = Graph.edgeJaccard(edges, topK = 10,
       expansionBudget = 0L).collect().toSeq
-    graft.CheckpointLease.releaseAll()
     assert(pruned === fallback)
     assert(pruned.length === 10)
     // the screen must actually prune here: every clique-internal edge
@@ -245,10 +226,8 @@ class GraphSpec extends SparkSpec {
     val edges = Graph.coPurchaseEdges(
       graft.Tables.lineitem(spark, "/root/testdata/sf0.001"))
     val pruned = Graph.edgeJaccard(edges).collect().toSeq
-    graft.CheckpointLease.releaseAll()
     val full = Graph.edgeJaccard(edges, expansionBudget = 0L)
       .collect().toSeq
-    graft.CheckpointLease.releaseAll()
     assert(pruned === full)
     assert(pruned.nonEmpty)
   }
@@ -263,14 +242,12 @@ class GraphSpec extends SparkSpec {
     val got = Graph.clusteringCoeff(edges)
       .select("node", "deg", "n_tri", "coeff")
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(got === Seq((1L, 2L, 1L, 1.0), (2L, 2L, 1L, 1.0),
       (3L, 3L, 1L, 2.0 * 1.0 / 6.0), (4L, 1L, 0L, 0.0)))
     // struct-keyed fallback path agrees
     val viaShuffle = Graph.clusteringCoeff(edges, broadcastMaxEdges = 0L)
       .select("node", "deg", "n_tri", "coeff")
       .as[(Long, Long, Long, Double)].collect().toSeq.sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(viaShuffle === got)
   }
 
@@ -298,7 +275,6 @@ class GraphSpec extends SparkSpec {
       .select("m_ends", "sjk", "sj", "sjj", "r_num", "r_den", "assortativity")
       .as[(Long, Long, Long, Long, Long, Long, Double)].collect().toSeq
     assert(r === Seq((4L, 8L, 6L, 10L, -4L, 4L, -1.0)))
-    graft.CheckpointLease.releaseAll()
   }
 
   test("degreeDistribution: star graph counts leaves and hub with shares") {
@@ -323,7 +299,6 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toMap
     assert(r === Map(1L -> 1L, 2L -> 1L, 3L -> 1L,
       10L -> 3L, 11L -> 3L, 12L -> 3L))
-    graft.CheckpointLease.releaseAll()
   }
 
   test("lpaModularity: planted two-community graph scores exact per-" +
@@ -367,7 +342,6 @@ class GraphSpec extends SparkSpec {
       r.getAs[Long]("d_sum"))).toSet === Set((1L, 2L, 2L, 5L),
       (2L, 1L, 0L, 2L), (3L, 1L, 0L, 3L), (10L, 2L, 2L, 4L)))
     assert(oneRound.map(_.getAs[Double]("q_contrib")).sum < qLpa)
-    graft.CheckpointLease.releaseAll()
   }
 
   test("labelPropagation: partition-invariant (integer argmax ties)") {
@@ -376,10 +350,8 @@ class GraphSpec extends SparkSpec {
     val edges = (und ++ und.map(_.swap)).toDF("src", "dst")
     val a = Graph.labelPropagation(edges.repartition(7))
       .as[(Long, Long)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     val b = Graph.labelPropagation(edges.coalesce(1))
       .as[(Long, Long)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     assert(a === b)
   }
   test("bfsDistances: hand-computed hops on a chain from the min-tie " +
@@ -389,12 +361,10 @@ class GraphSpec extends SparkSpec {
       .flatMap { case (u, v) => Seq((u, v), (v, u)) }.toDF("src", "dst")
     val got = Graph.bfsDistances(edges, seedCount = 1, rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.CheckpointLease.releaseAll()
     assert(got === Map(2L -> 0L, 1L -> 1L, 3L -> 1L, 4L -> 2L, 5L -> 3L,
       6L -> 4L))
     val capped = Graph.bfsDistances(edges, seedCount = 1, rounds = 2)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.CheckpointLease.releaseAll()
     assert(capped === Map(2L -> 0L, 1L -> 1L, 3L -> 1L, 4L -> 2L))
   }
 
@@ -408,7 +378,6 @@ class GraphSpec extends SparkSpec {
     // broken by id)
     val got = Graph.bfsDistances(edges, seedCount = 2, rounds = 4)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.CheckpointLease.releaseAll()
     assert(got === Map(1L -> 0L, 2L -> 0L, 3L -> 1L, 4L -> 1L, 7L -> 1L))
     assert(!got.contains(5L) && !got.contains(6L))
   }
@@ -423,7 +392,6 @@ class GraphSpec extends SparkSpec {
     val r = Graph.linkPrediction(edges)
       .select("u", "v", "common", "ra_micro")
       .as[(Long, Long, Long, Long)].collect().sortBy(x => (x._1, x._2))
-    graft.CheckpointLease.releaseAll()
     assert(r.toSeq === Seq((1L, 3L, 2L, 1000000L),
       (2L, 4L, 2L, 1000000L)))
   }
@@ -436,11 +404,9 @@ class GraphSpec extends SparkSpec {
     val star = (1L to 4L).flatMap(l => Seq((10L, l), (l, 10L)))
       .toDF("src", "dst")
     assert(Graph.linkPrediction(star, maxMiddleDegree = 3L).count() === 0L)
-    graft.CheckpointLease.releaseAll()
     val r = Graph.linkPrediction(star, maxMiddleDegree = 4L)
       .select("u", "v", "common", "ra_micro")
       .as[(Long, Long, Long, Long)].collect()
-    graft.CheckpointLease.releaseAll()
     assert(r.length === 6) // C(4,2) leaf pairs
     assert(r.forall(x => x._3 === 1L && x._4 === 250000L))
   }
@@ -454,7 +420,6 @@ class GraphSpec extends SparkSpec {
       (9L, 20L), (20L, 9L), (9L, 21L), (21L, 9L)).toDF("src", "dst")
     val r = Graph.linkPrediction(edges, neighborBudget = 2)
       .select("u", "v").as[(Long, Long)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     assert(r.contains((1L, 2L)))
     assert(!r.contains((1L, 9L)) && !r.contains((2L, 9L)))
   }
@@ -466,7 +431,6 @@ class GraphSpec extends SparkSpec {
       (7L, 8L), (8L, 7L)).toDF("src", "dst")
     val r = Graph.weakComponents(edges)
       .as[(Long, Long)].collect().sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(r.toSeq === Seq((1L, 3L), (7L, 2L)))
   }
 
@@ -482,7 +446,6 @@ class GraphSpec extends SparkSpec {
       .collect().map(x => (x.getLong(0), x.getLong(1),
         Option(x.get(2)).map(_.asInstanceOf[Long]), x.getLong(3)))
       .sortBy(_._1)
-    graft.CheckpointLease.releaseAll()
     assert(r.toSeq === Seq(
       (1L, 1L, None, 0L), (2L, 1L, Some(1L), 1L), (3L, 1L, Some(1L), 1L),
       (7L, 7L, None, 0L), (8L, 7L, Some(7L), 1L), (9L, 7L, Some(8L), 2L)))
@@ -525,7 +488,6 @@ class GraphSpec extends SparkSpec {
       .as[(Long, Long)].collect().toSet
     val direct = Graph.weakComponents(edges)
       .as[(Long, Long)].collect().toSet
-    graft.CheckpointLease.releaseAll()
     assert(fromCert === direct)
   }
 }

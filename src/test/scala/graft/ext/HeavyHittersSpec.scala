@@ -62,7 +62,6 @@ class HeavyHittersSpec extends SparkSpec {
       assert(e >= t, s"$tok: CMS estimate $e below true $t")
       assert(o === e - t)
     }
-    graft.CheckpointLease.releaseAll()
   }
 
   test("countMinEstimates: overcount reflects forced collisions exactly") {
@@ -79,7 +78,6 @@ class HeavyHittersSpec extends SparkSpec {
     r.foreach { case (tok, t, e) =>
       assert(e >= t && e <= total, s"$tok: est $e outside [$t, $total]")
     }
-    graft.CheckpointLease.releaseAll()
   }
 
   test("countMinWidthSweep: width 1 collapses to the grand total, a wide " +
@@ -89,7 +87,6 @@ class HeavyHittersSpec extends SparkSpec {
         widths = Seq(1, 1 << 20), topK = 3)
       .select("width", "token", "true_cnt", "cms_est", "overcount")
       .as[(Long, String, Long, Long, Long)].collect()
-    graft.CheckpointLease.releaseAll()
     val byWidth = r.groupBy(_._1)
     // width 1: every counter is the 6-token grand total
     byWidth(1L).foreach { case (_, tok, t, e, o) =>

@@ -491,7 +491,6 @@ class MultimodalSpec extends SparkSpec {
       .as[Multimodal.Asset]
     val pairs = Multimodal.phashNearDupPairs(Multimodal.encodePng(ds))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2)))
-    graft.CheckpointLease.releaseAll()
     assert(pairs.contains((1L, 2L, 0)), s"identical docs must pair: " +
       pairs.mkString(", "))
     pairs.foreach { case (a, b, hm) =>
@@ -512,7 +511,6 @@ class MultimodalSpec extends SparkSpec {
       .as[Multimodal.Asset]
     val cl = Multimodal.phashClusters(Multimodal.encodePng(ds))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    graft.CheckpointLease.releaseAll()
     assert(cl.get(1L).contains(1L) && cl.get(2L).contains(1L) &&
       cl.get(5L).contains(1L), s"identical trio must share cluster 1: $cl")
     assert(!cl.contains(9L),

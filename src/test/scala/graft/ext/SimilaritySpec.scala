@@ -858,7 +858,6 @@ class SimilaritySpec extends SparkSpec {
       Similarity.ivfTopK(emb, k = Similarity.MmrShortlist)
         .select(col("query_id"), col("neighbor_id").as("cand_id"),
           col("cosine").as("rel")))))
-    graft.CheckpointLease.releaseAll()
     val nq = Similarity.NQueries
     // rank 1 is pure relevance, so agreement here is IVF recall@1
     val b1 = brute.filter(_._2 == 1).map(r => r._1 -> r._3).toMap
@@ -948,7 +947,6 @@ class SimilaritySpec extends SparkSpec {
     val rb = Similarity.lofScores(emb,
         edges = Some(Similarity.ivfKnnEdges(emb, k = Similarity.LofK)))
       .collect().map(x => x.getAs[Long]("vec_id") -> x).toMap
-    graft.CheckpointLease.releaseAll()
     assert(rb.contains(99L), "outlier missing from the blocked graph")
     assert(rb(99L).getAs[Boolean]("is_outlier"),
       s"blocked-graph LOF ${rb(99L).getAs[Double]("lof")} below threshold")
@@ -971,7 +969,6 @@ class SimilaritySpec extends SparkSpec {
       .collect()
       .map(x => x.getAs[Long]("vec_id") -> x.getAs[Boolean]("is_outlier"))
       .toMap
-    graft.CheckpointLease.releaseAll()
     assert(ivf.keySet === exact.keySet,
       "every vector must keep a neighborhood under the blocked graph")
     assert(exact.values.forall(_ == false) && ivf.values.forall(_ == false),
@@ -1261,7 +1258,6 @@ class SimilaritySpec extends SparkSpec {
       .orderBy("probes").collect()
       .map(x => (x.getInt(0), x.getLong(1), x.getLong(2), x.getLong(3),
         x.getDouble(4)))
-    graft.CheckpointLease.releaseAll()
     assert(r.map(_._1).toSeq === Similarity.IvfProbeArms)
     assert(r.map(_._2).distinct.length === 1, "truth size must be fixed")
     r.sliding(2).foreach { case Array(lo, hi) =>
@@ -1382,7 +1378,6 @@ class SimilaritySpec extends SparkSpec {
       .map(r => r.getAs[Long]("label") ->
         ((r.getAs[Long]("n"), r.getAs[Long]("correct"),
           r.getAs[Double]("accuracy")))).toMap
-    graft.CheckpointLease.releaseAll()
     assert(ivf.nonEmpty)
     ivf.foreach { case (label, (n, _, acc)) =>
       val (ne, _, accE) = exact(label)

@@ -271,7 +271,6 @@ class TextAnalysisSpec extends SparkSpec {
       .as[(String, String, Long, Long, Long, Double)].collect().toSeq
     assert(r === Seq(("a", "b", 2L, 2L, 2L, 2.0),
       ("b", "a", 1L, 2L, 2L, 1.0)))
-    graft.CheckpointLease.releaseAll()
   }
 
   test("gopherRules: each rule trips on its own witness document") {

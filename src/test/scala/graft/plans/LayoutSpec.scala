@@ -19,6 +19,11 @@ class LayoutSpec extends SparkSpec {
     // y=255 alone: all odd bits of 16 => 0b1010_1010_1010_1010 = 43690
     // x=255 alone: all even bits => 21845; both => 65535
     assert(df.as[Long].collect().toSeq === Seq(7L, 43690L, 21845L, 0L, 65535L))
+    // 16-bit inputs, the width the z-order writer uses: x alone fills the
+    // even bits of 32 (0x55555555), y alone the odd bits (0xAAAAAAAA)
+    val wide = Seq((65535L, 0L), (0L, 65535L)).toDF("x", "y")
+      .select(Layout.mortonKey(col("x"), col("y"), 16).as("z"))
+    assert(wide.as[Long].collect().toSeq === Seq(1431655765L, 2863311530L))
   }
 
   test("zorderBlocks: a block covers a narrow square in both dimensions") {

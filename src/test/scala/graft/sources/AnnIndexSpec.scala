@@ -16,7 +16,6 @@ class AnnIndexSpec extends SparkSpec {
     if (!new java.io.File(s"$dir/codes").isDirectory) {
       val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
       AnnIndex.buildIvfPq(e, dir)
-      graft.CheckpointLease.releaseAll()
     }
   }
 
@@ -70,7 +69,6 @@ class AnnIndexSpec extends SparkSpec {
     val memFull = rows(Similarity.ivfPqTopK(e,
       coarseCodebook = Some(cents), pqBooks = Some(books)))
     val stFull = rows(AnnIndex.serveIvfPqTopK(spark, dir, e))
-    graft.CheckpointLease.releaseAll()
     assert(stFull === memFull,
       "default-probe stored serve must equal ivfPqTopK")
   }
@@ -84,11 +82,10 @@ class AnnIndexSpec extends SparkSpec {
     // strict subset of the 16 lists, so partial-write is observable
     val base = e.filter(col("vec_id") % 50 =!= 0)
     val delta = e.filter(col("vec_id") % 50 === 0)
-    val cents = graft.CheckpointLease.track(
-      Similarity.trainCentroids(e).localCheckpoint(true))
-    val books = graft.CheckpointLease.track(
+    val cents = Similarity.trainCentroids(e).localCheckpoint(true)
+    val books =
       Similarity.trainPqCodebooks(Similarity.l2normalized(e))
-        .localCheckpoint(true))
+        .localCheckpoint(true)
     AnnIndex.buildIvfPq(base, adir, Some(cents), Some(books))
 
     // snapshot the per-partition file sets before the append
@@ -125,18 +122,16 @@ class AnnIndexSpec extends SparkSpec {
       .toSet
     assert(codes(adir) === codes(rebuildDir),
       "appended index must equal the from-scratch rebuild row-for-row")
-    graft.CheckpointLease.releaseAll()
   }
 
   test("serving from the stored index skips retraining: a fresh session " +
       "read serves straight from the written codebooks") {
     ensureIndex() // self-contained: rebuild if test 1 didn't run
     // serve alone must not touch trainCentroids/trainPqCodebooks (no
-    // checkpoint lease acquired beyond a build-if-missing above)
+    // checkpoint made beyond a build-if-missing above)
     val e = Tables.embeddings(spark, "/root/testdata/sf0.001")
     val served = AnnIndex.serveIvfPqTopK(spark, dir, e)
     assert(served.filter(col("rank") === 1).count() > 0)
-    graft.CheckpointLease.releaseAll()
   }
 
   test("sim_serve_ivfpq builds once per dataset fingerprint: the second " +
@@ -148,7 +143,6 @@ class AnnIndexSpec extends SparkSpec {
       "fingerprint must be a pure function of the file metadata")
     val q = AnnIndex.queries("sim_serve_ivfpq")
     val first = q(spark, sf).collect()
-    graft.CheckpointLease.releaseAll()
     val codes = new java.io.File(
       s"${sys.props("user.dir")}/target/ann-index/serve_" +
         s"${sf.replaceAll("[^A-Za-z0-9._-]", "_")}_$fp/codes")
@@ -158,7 +152,6 @@ class AnnIndexSpec extends SparkSpec {
     }.toMap
     val before = snapshot()
     val second = q(spark, sf).collect()
-    graft.CheckpointLease.releaseAll()
     assert(snapshot() === before,
       "second serve must not rebuild or touch the codes tree")
     assert(first.map(_.toString).sorted.toSeq ===
@@ -228,7 +221,6 @@ class AnnIndexSpec extends SparkSpec {
       new java.io.File(parent, s"serve_${key}_$fp"),
       graft.sources.Scratch.allowedRoots(spark))
     val dir = AnnIndex.ensureServeIndex(spark, sf)
-    graft.CheckpointLease.releaseAll()
     assert(!staleA.exists(), "stale same-key fingerprint must be swept")
     assert(!staleB.exists(), "orphaned staging must be swept")
     assert(otherKey.exists(),
